@@ -39,7 +39,8 @@ def merge_apply(target: DataFrame, changeset: DataFrame, pk: list[str]) -> DataF
     # exactly MERGE's insert-or-replace semantics, and it makes the apply
     # idempotent (tests/test_operators.py::test_merge_apply_is_idempotent).
     changed_keys = changeset.where(F.col(CHANGE_OP).isin("I", "U", "D")).select(*pk)
-    kept = target.join(changed_keys, pk, "left_anti")
+    # a join on ``pk`` moves the key columns first; select restores the order
+    kept = target.join(changed_keys, pk, "left_anti").select(*cols)
     upserts = changeset.where(F.col(CHANGE_OP).isin("I", "U")).select(*cols)
     return kept.unionByName(upserts)
 

@@ -276,10 +276,11 @@ def sync_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(_r5_stage(sf_dir), "orders_zorder")
     (
         o.withColumn("z", _morton16(cb, db))
-        # granule count follows session parallelism (== 32 on local[32]),
-        # not a constant: the r11 factor-100 probe showed hard-coded widths
-        # become task funnels the moment the cluster outgrows them
-        .repartitionByRange(max(8, spark.sparkContext.defaultParallelism), "z")
+        # granule count follows session parallelism, not a constant: the r11
+        # factor-100 probe showed hard-coded widths become task funnels the
+        # moment the cluster outgrows them. The floor of 32 keeps enough
+        # granules for min/max skipping on either dimension on small hosts.
+        .repartitionByRange(max(32, spark.sparkContext.defaultParallelism), "z")
         .sortWithinPartitions("z")
         .drop("z")
         .write.mode("overwrite")

@@ -137,9 +137,15 @@ def rowcount(sf_dir: str, table: str) -> int:
     aggregate pushdown but still schedules a job per fragment. Reading the
     footers via pyarrow.dataset is milliseconds and works for both a
     single parquet file and a directory of part files."""
+    return parquet_rows(path_for(sf_dir, table))
+
+
+def parquet_rows(path: str) -> int:
+    """``rowcount`` for any parquet file or directory of part files (files
+    starting with ``_`` or ``.``, such as ``_SUCCESS``, are skipped)."""
     import pyarrow.dataset as pads
 
-    ds = pads.dataset(path_for(sf_dir, table), format="parquet")
+    ds = pads.dataset(path, format="parquet")
     return sum(frag.metadata.num_rows for frag in ds.get_fragments())
 
 

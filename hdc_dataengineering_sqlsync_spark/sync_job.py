@@ -16,19 +16,33 @@ Config (JSON)::
       ]
     }
 
-Per table the job: reads source, drift-checks its schema against the target,
-loads the last sync watermark, pulls either the full snapshot or (when
-``version_col`` is set and state exists) only rows past the watermark,
-diffs/merges into the target, atomically swaps the target directory,
-validates row counts, and persists the new watermark. Exactly the
-change-tracking sync loop of an MS-SQL CHANGETABLE-based utility, re-expressed
-over parquet + Spark; the JDBC transport (sources/jdbc.py) slots in at the
-read/write boundary when a database is reachable.
+Per table the job reads the source, drift-checks its schema against the
+target and loads the last sync watermark. Then, by mode:
 
-Scale notes: the diff is one PK-keyed shuffle (operators/diff.py); the
-changeset is materialized once (operators/merge.py); the atomic
-directory swap is the local stand-in for a table-format commit
-(Iceberg/Delta snapshot swap) on a real deployment.
+- initial copy (no target yet): stage the source, check the staged parquet
+  footers hold every source row, swap the staging directory into place.
+- snapshot: count, stage, validate, swap. One payload-free diff job over
+  (pk, digest) of both sides counts I/U/D, the source rows and the
+  duplicated source keys. The merged target of a snapshot sync IS the
+  source, so the source itself is staged, in the target's column order.
+  The sync is rejected before the swap when a source key is duplicated or
+  the staged footers' row count differs from the source's; the old target
+  then stays in place. An empty diff stages and swaps nothing.
+- incremental (``version_col`` set and state exists): pull only rows past
+  the watermark, diff them against the target rows they touch, materialize
+  the changeset, merge it into the target, stage and swap.
+
+The watermark advances last, and only when the sync validated. Exactly the
+change-tracking sync loop of an MS-SQL CHANGETABLE-based utility,
+re-expressed over parquet + Spark; the JDBC transport (sources/jdbc.py)
+slots in at the read/write boundary when a database is reachable.
+
+Scale notes: a snapshot sync is two source scans: the counting job (one
+PK-keyed shuffle of pk + digest per row, operators/diff.py::diff_counts)
+and the write, which needs no shuffle. Validation reads parquet footers,
+not rows. The incremental changeset is materialized once
+(operators/merge.py). The atomic directory swap is the local stand-in for
+a table-format commit (Iceberg/Delta snapshot swap) on a real deployment.
 """
 
 from __future__ import annotations
@@ -42,13 +56,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdc_dataengineering_sqlsync_spark.operators.diff import snapshot_diff
+from hdc_dataengineering_sqlsync_spark.operators.diff import diff_counts, snapshot_diff
 from hdc_dataengineering_sqlsync_spark.operators.merge import (
     materialize_changeset,
     merge_apply,
 )
 from hdc_dataengineering_sqlsync_spark.operators.schema_drift import SchemaDrift, detect_drift
 from hdc_dataengineering_sqlsync_spark.operators.state import StateStore, SyncState
+from hdc_dataengineering_sqlsync_spark.registry import parquet_rows
 
 
 @dataclass
@@ -70,16 +85,24 @@ class SyncReport:
     new_version: int | None = None
 
 
-def _atomic_swap_write(df: DataFrame, target_path: str) -> None:
+def _atomic_swap_write(df: DataFrame, target_path: str, expect_rows: int | None = None) -> bool:
     """Write df to a staging dir, then swap it into place. The merged plan
     reads the OLD target lazily, so writing over it in place would corrupt
     the input mid-scan; staging + swap is also what makes a crashed sync
-    leave the previous target intact."""
+    leave the previous target intact.
+
+    With ``expect_rows``, the staged parquet footers must hold exactly that
+    many rows; otherwise the staging dir is removed, the target is left as
+    it was, and False is returned."""
     staging = target_path.rstrip("/") + "__staging"
     df.write.mode("overwrite").parquet(staging)
+    if expect_rows is not None and parquet_rows(staging) != expect_rows:
+        shutil.rmtree(staging)
+        return False
     if os.path.exists(target_path):
         shutil.rmtree(target_path)
     os.replace(staging, target_path)
+    return True
 
 
 def _current_version(source: DataFrame, version_col: str) -> int:
@@ -96,12 +119,11 @@ def sync_table(spark: SparkSession, cfg: TableSyncConfig, store: StateStore) -> 
 
     if not os.path.exists(cfg.target_path):
         # first run: full snapshot copy (the reference's initial sync)
-        n = source.count()
-        _atomic_swap_write(source, cfg.target_path)
-        store.put(SyncState(cfg.name, new_version))
-        return SyncReport(
-            cfg.name, "initial_copy", {"I": n}, None, validated=True, new_version=new_version
-        )
+        n = parquet_rows(cfg.source_path)
+        validated = _atomic_swap_write(source, cfg.target_path, n)
+        if validated:
+            store.put(SyncState(cfg.name, new_version))
+        return SyncReport(cfg.name, "initial_copy", {"I": n}, None, validated, new_version)
 
     target = spark.read.parquet(cfg.target_path)
     drift = detect_drift(source.schema, target.schema)
@@ -122,26 +144,23 @@ def sync_table(spark: SparkSession, cfg: TableSyncConfig, store: StateStore) -> 
             snapshot_diff(delta, target.join(delta.select(*cfg.pk), cfg.pk, "left_semi"),
                           pk=cfg.pk)
         )
-    else:
-        mode = "snapshot"
-        changes = materialize_changeset(snapshot_diff(source, target, pk=cfg.pk))
-
-    op_counts = {
-        r["change_op"]: r["n"]
-        for r in changes.groupBy("change_op").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    merged = merge_apply(target, changes, pk=cfg.pk)
-    _atomic_swap_write(merged, cfg.target_path)
-
-    # post-apply validation (sync_rowcount_validate semantics)
-    if mode == "snapshot":
-        expect = source.agg(F.count(F.lit(1)).alias("n"), F.countDistinct(*cfg.pk).alias("p"))
-        got = spark.read.parquet(cfg.target_path).agg(
-            F.count(F.lit(1)).alias("n"), F.countDistinct(*cfg.pk).alias("p")
-        )
-        validated = expect.collect()[0] == got.collect()[0]
-    else:
+        op_counts = {
+            r["change_op"]: r["n"]
+            for r in changes.groupBy("change_op").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        _atomic_swap_write(merge_apply(target, changes, pk=cfg.pk), cfg.target_path)
         validated = True  # incremental: full validation deferred to next snapshot diff
+    else:
+        # snapshot: the merged target IS the source, so the source itself is
+        # staged; it replaces the target only if the checks below pass
+        mode = "snapshot"
+        expect = diff_counts(source, target, pk=cfg.pk).collect()[0]
+        op_counts = {op: expect[op] for op in ("I", "U", "D") if expect[op]}
+        validated = expect["duplicate_keys"] == 0
+        if validated and op_counts:
+            validated = _atomic_swap_write(
+                source.select(*target.columns), cfg.target_path, expect["source_rows"]
+            )
     if validated:
         store.put(SyncState(cfg.name, new_version))
     return SyncReport(cfg.name, mode, op_counts, None, validated, new_version)

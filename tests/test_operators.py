@@ -87,6 +87,24 @@ def test_sync_roundtrip_small_frames(spark):
     assert merged.exceptAll(source).count() == 0
 
 
+@pytest.mark.parametrize("cross_engine", [False, True])
+def test_diff_and_merge_match_columns_by_name(spark, cross_engine):
+    """A target that stores its columns in another order than the source
+    diffs by column name, and merge_apply keeps the target's order."""
+    source = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], "k long, v string, x double"
+    )
+    target = spark.createDataFrame(
+        [("a", 1, 1.0), ("stale", 2, 2.0), ("d", 4, 4.0)], "v string, k long, x double"
+    )
+    changes = snapshot_diff(source, target, pk=["k"], cross_engine_digest=cross_engine)
+    summary = {r["change_op"]: r["n"] for r in diff_summary(changes).collect()}
+    assert summary == {"=": 1, "U": 1, "I": 1, "D": 1}
+    merged = merge_apply(target, changes, pk=["k"])
+    assert merged.columns == target.columns
+    assert sorted(merged.collect()) == sorted(source.select(*target.columns).collect())
+
+
 def test_digest_null_vs_empty_distinct(spark):
     """(NULL, 'a') and ('a', NULL) and ('', 'a') must digest differently
     (concat_ws silently drops NULLs — the sentinel guards that)."""

@@ -170,6 +170,120 @@ def test_sync_job_converges_any_drift_profile(spark, tmp_path):
     prop()
 
 
+def _write(spark, rows, schema, path):
+    import shutil
+
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+
+
+def _files(path):
+    """name -> (inode, mtime_ns, bytes) of every file under a directory."""
+    out = {}
+    for name in sorted(os.listdir(path)):
+        st = os.stat(os.path.join(path, name))
+        with open(os.path.join(path, name), "rb") as f:
+            out[name] = (st.st_ino, st.st_mtime_ns, f.read())
+    return out
+
+
+def _first_sync(spark, tmp_path, rows):
+    """Initial copy of a (k, val) source; returns its config and state store."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    _write(spark, rows, "k long, val string", src)
+    cfg = TableSyncConfig(name="t", pk=["k"], source_path=src, target_path=tgt)
+    store = StateStore(str(tmp_path / "state.json"))
+    assert sync_table(spark, cfg, store).mode == "initial_copy"
+    return cfg, store
+
+
+def test_snapshot_sync_rejects_duplicate_pk_before_swap(spark, tmp_path):
+    """A duplicated source key fails the sync before anything is written:
+    the old target's files and the watermark stay exactly as they were."""
+    rows = [(k, f"v{k}") for k in range(1, 21)]
+    cfg, store = _first_sync(spark, tmp_path, rows)
+    before, version = _files(cfg.target_path), store.get("t").last_version
+
+    _write(spark, rows + [(5, "dup")], "k long, val string", cfg.source_path)
+    report = sync_table(spark, cfg, store)
+    assert report.mode == "snapshot" and not report.validated
+    assert _files(cfg.target_path) == before
+    assert store.get("t").last_version == version
+    assert not os.path.exists(cfg.target_path + "__staging")
+
+
+def test_snapshot_sync_with_empty_diff_commits_nothing(spark, tmp_path):
+    """An in-sync pair validates and advances the watermark without
+    rewriting a single target file."""
+    cfg, store = _first_sync(spark, tmp_path, [(k, f"v{k}") for k in range(1, 21)])
+    before, version = _files(cfg.target_path), store.get("t").last_version
+
+    report = sync_table(spark, cfg, store)
+    assert report.op_counts == {} and report.validated
+    assert store.get("t").last_version == version + 1
+    assert _files(cfg.target_path) == before
+
+
+def test_atomic_swap_write_rejects_a_short_staged_write(spark, tmp_path):
+    """The pre-swap footer check: staged output that does not hold the
+    expected row count is discarded and the target is left as it was."""
+    from hdc_dataengineering_sqlsync_spark.sync_job import _atomic_swap_write
+
+    cfg, _ = _first_sync(spark, tmp_path, [(k, f"v{k}") for k in range(1, 21)])
+    before = _files(cfg.target_path)
+    staged = spark.createDataFrame([(k, "x") for k in range(1, 20)], "k long, val string")
+    assert not _atomic_swap_write(staged, cfg.target_path, expect_rows=20)
+    assert _files(cfg.target_path) == before
+    assert not os.path.exists(cfg.target_path + "__staging")
+
+
+def test_sync_counts_are_exact_when_the_pk_is_not_the_first_column(spark, tmp_path):
+    """Source columns (val, k, ver) with PK k: every sync reports exactly the
+    one changed row, in snapshot mode, in CDC mode and in snapshot mode
+    after CDC, and the target keeps the source's column order."""
+    schema = "val string, k long, ver long"
+    rows = [(f"v{k}", k, 1) for k in range(1, 101)]
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    snap = TableSyncConfig(name="t", pk=["k"], source_path=src, target_path=tgt)
+    cdc = TableSyncConfig(name="t", pk=["k"], source_path=src, target_path=tgt, version_col="ver")
+    store = StateStore(str(tmp_path / "state.json"))
+
+    def sync(cfg, k, version):
+        rows[k - 1] = (f"changed{version}", k, version)
+        _write(spark, rows, schema, src)
+        report = sync_table(spark, cfg, store)
+        return report.op_counts, spark.read.parquet(tgt).columns
+
+    want = ({"U": 1}, ["val", "k", "ver"])
+    _write(spark, rows, schema, src)
+    assert sync_table(spark, snap, store).mode == "initial_copy"
+    assert sync(snap, 3, 2) == want
+    assert sync(snap, 4, 3) == want
+    assert sync(cdc, 5, 4) == want
+    assert sync(snap, 6, 5) == want
+    got = {(r["k"], r["val"]) for r in spark.read.parquet(tgt).collect()}
+    assert got == {(k, v) for v, k, _ in rows}
+
+
+def test_diff_counts_checks_duplicates_on_the_diff_shuffle(spark):
+    """diff_counts returns exact I/U/D, source rows and duplicated keys, and
+    its plan has one exchange per side: the duplicate check rides on the
+    diff's own PK shuffle."""
+    from hdc_dataengineering_sqlsync_spark.operators.diff import diff_counts
+
+    schema = "k long, val string"
+    source = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, "b2"), (3, "c"), (5, "e")], schema
+    )
+    target = spark.createDataFrame([(1, "a"), (3, "stale"), (4, "d")], schema)
+    counts = diff_counts(source, target, pk=["k"])
+    plan = counts._jdf.queryExecution().executedPlan().toString()  # before AQE re-plans
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    row = counts.collect()[0]
+    assert row.asDict() == {"I": 2, "U": 1, "D": 1, "source_rows": 5, "duplicate_keys": 1}
+
+
 _DRIFT_PROFILES = [(7, 3, 11), (2, 2, 2), (9, 5, 4)]
 
 
